@@ -2,237 +2,10 @@ package graft.agg
 
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
-import graft.sketch._
 
-/**
- * Spark typed [[Aggregator]]s wrapping the pure-JVM sketch kernels.
- *
- * Execution model: Catalyst runs these as ObjectHashAggregate with automatic
- * partial aggregation — `reduce` consumes rows partition-locally (the
- * reference's single-threaded update loop,
- * /root/reference/Simulator/Program.cs:439-474), then only the O(sketch)
- * buffers cross the shuffle and `merge` folds them. That partial→final split
- * is the piece the reference never had (SURVEY.md §2.6) and is why these
- * scale: shuffle bytes are bounded by sketch size × partitions, independent
- * of row count or key cardinality.
- *
- * Buffers are the kernel objects themselves via Kryo encoders — mutated in
- * place per partition, serialized only at the exchange. Null keys are
- * skipped (SQL-aggregate convention).
- */
+/** Typed [[Aggregator]]s that are not sketches. The sketch builds are the
+  * one native [[SketchAgg]]. */
 object SketchAggregators {
-
-  // ---- Count-Min over (key, weight)
-
-  final class CmAggregator(eps: Double, delta: Double, seed: Long)
-      extends Aggregator[(String, Long), CountMinSketch, Array[Byte]] {
-    override def zero: CountMinSketch = CountMinSketch.fromErrorBounds(eps, delta, seed)
-    override def reduce(b: CountMinSketch, a: (String, Long)): CountMinSketch = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: CountMinSketch, y: CountMinSketch): CountMinSketch = x.merge(y)
-    override def finish(b: CountMinSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[CountMinSketch] = Encoders.kryo[CountMinSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Re-merge pre-built CM sketches (checkpoint shards, two-level agg). */
-  final class CmMergeAggregator
-      extends Aggregator[Array[Byte], Option[CountMinSketch], Array[Byte]] {
-    override def zero: Option[CountMinSketch] = None
-    override def reduce(b: Option[CountMinSketch], a: Array[Byte]): Option[CountMinSketch] = {
-      if (a == null) b
-      else b match {
-        case None => Some(CountMinSketch.deserialize(a))
-        case Some(s) => Some(s.merge(CountMinSketch.deserialize(a)))
-      }
-    }
-    override def merge(x: Option[CountMinSketch], y: Option[CountMinSketch]) = (x, y) match {
-      case (Some(a), Some(b)) => Some(a.merge(b))
-      case (a, None) => a
-      case (None, b) => b
-    }
-    override def finish(b: Option[CountMinSketch]): Array[Byte] =
-      b.map(_.serialize()).orNull
-    override def bufferEncoder: Encoder[Option[CountMinSketch]] =
-      Encoders.kryo[Option[CountMinSketch]]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- Heavy hitters: CM + candidate heap
-
-  final class TopKAggregator(capacity: Int, eps: Double, delta: Double, seed: Long)
-      extends Aggregator[(String, Long), TopKSketch, Array[Byte]] {
-    override def zero: TopKSketch = TopKSketch(capacity, eps, delta, seed)
-    override def reduce(b: TopKSketch, a: (String, Long)): TopKSketch = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: TopKSketch, y: TopKSketch): TopKSketch = x.merge(y)
-    override def finish(b: TopKSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[TopKSketch] = Encoders.kryo[TopKSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- HyperLogLog distinct count
-
-  final class HllAggregator(p: Int, seed: Long)
-      extends Aggregator[String, HyperLogLog, Array[Byte]] {
-    override def zero: HyperLogLog = HyperLogLog(p, seed)
-    override def reduce(b: HyperLogLog, a: String): HyperLogLog = {
-      if (a != null) b.add(a)
-      b
-    }
-    override def merge(x: HyperLogLog, y: HyperLogLog): HyperLogLog = x.merge(y)
-    override def finish(b: HyperLogLog): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[HyperLogLog] = Encoders.kryo[HyperLogLog]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Merge pre-built KLL shards (binary → binary) — the re-aggregation
-    * face: per-tenant/per-partition sketches built once, any rollup served
-    * by merging finished state with no rescan (the checkpoint
-    * `mergeShards` path surfaced as a grouped SQL aggregate). */
-  final class KllMergeAggregator
-      extends Aggregator[Array[Byte], Option[KllSketch], Array[Byte]] {
-    override def zero: Option[KllSketch] = None
-    override def reduce(b: Option[KllSketch], a: Array[Byte]): Option[KllSketch] = {
-      if (a == null) b
-      else b match {
-        case None => Some(KllSketch.deserialize(a))
-        case Some(s) => Some(s.merge(KllSketch.deserialize(a)))
-      }
-    }
-    override def merge(x: Option[KllSketch], y: Option[KllSketch]): Option[KllSketch] = (x, y) match {
-      case (Some(a), Some(b)) => Some(a.merge(b))
-      case (a, None) => a
-      case (None, b) => b
-    }
-    override def finish(b: Option[KllSketch]): Array[Byte] =
-      b.map(_.serialize()).orNull
-    override def bufferEncoder: Encoder[Option[KllSketch]] =
-      Encoders.kryo[Option[KllSketch]]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  /** Merge pre-built HLL shards (binary → binary) — the cardinality
-    * tier's re-aggregation face beside [[KllMergeAggregator]]: register-max
-    * is idempotent, so overlapping shard sets (sliding windows, rollups)
-    * merge without double-counting and without rescanning rows. */
-  final class HllMergeAggregator
-      extends Aggregator[Array[Byte], Option[HyperLogLog], Array[Byte]] {
-    override def zero: Option[HyperLogLog] = None
-    override def reduce(b: Option[HyperLogLog], a: Array[Byte]): Option[HyperLogLog] = {
-      if (a == null) b
-      else b match {
-        case None => Some(HyperLogLog.deserialize(a))
-        case Some(s) => Some(s.merge(HyperLogLog.deserialize(a)))
-      }
-    }
-    override def merge(x: Option[HyperLogLog], y: Option[HyperLogLog]): Option[HyperLogLog] = (x, y) match {
-      case (Some(a), Some(b)) => Some(a.merge(b))
-      case (a, None) => a
-      case (None, b) => b
-    }
-    override def finish(b: Option[HyperLogLog]): Array[Byte] =
-      b.map(_.serialize()).orNull
-    override def bufferEncoder: Encoder[Option[HyperLogLog]] =
-      Encoders.kryo[Option[HyperLogLog]]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- Bloom filter build
-
-  final class BloomAggregator(expectedItems: Long, fpp: Double, seed: Long)
-      extends Aggregator[String, BloomFilter, Array[Byte]] {
-    override def zero: BloomFilter = BloomFilter.fromExpected(expectedItems, fpp, seed)
-    override def reduce(b: BloomFilter, a: String): BloomFilter = {
-      if (a != null) b.add(a)
-      b
-    }
-    override def merge(x: BloomFilter, y: BloomFilter): BloomFilter = x.merge(y)
-    override def finish(b: BloomFilter): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[BloomFilter] = Encoders.kryo[BloomFilter]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- Count-Sketch over (key, weight)
-
-  final class CsAggregator(depth: Int, width: Int, seed: Long)
-      extends Aggregator[(String, Long), CountSketch, Array[Byte]] {
-    override def zero: CountSketch = CountSketch(depth, width, seed)
-    override def reduce(b: CountSketch, a: (String, Long)): CountSketch = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: CountSketch, y: CountSketch): CountSketch = x.merge(y)
-    override def finish(b: CountSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[CountSketch] = Encoders.kryo[CountSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- Misra-Gries frequent items
-
-  final class MgAggregator(capacity: Int)
-      extends Aggregator[(String, Long), MisraGries, Array[Byte]] {
-    override def zero: MisraGries = MisraGries(capacity)
-    override def reduce(b: MisraGries, a: (String, Long)): MisraGries = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: MisraGries, y: MisraGries): MisraGries = x.merge(y)
-    override def finish(b: MisraGries): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[MisraGries] = Encoders.kryo[MisraGries]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- Filtered Space-Saving
-
-  final class FssAggregator(numEntries: Int, numBuckets: Int, seed: Long)
-      extends Aggregator[(String, Long), FilteredSpaceSaving, Array[Byte]] {
-    override def zero: FilteredSpaceSaving =
-      FilteredSpaceSaving(numEntries, numBuckets, seed)
-    override def reduce(b: FilteredSpaceSaving, a: (String, Long)): FilteredSpaceSaving = {
-      if (a._1 != null) b.update(a._1, a._2)
-      b
-    }
-    override def merge(x: FilteredSpaceSaving, y: FilteredSpaceSaving) = x.merge(y)
-    override def finish(b: FilteredSpaceSaving): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[FilteredSpaceSaving] =
-      Encoders.kryo[FilteredSpaceSaving]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- KLL quantiles over doubles
-
-  final class KllAggregator(k: Int, seed: Long)
-      extends Aggregator[java.lang.Double, KllSketch, Array[Byte]] {
-    override def zero: KllSketch = KllSketch(k, seed)
-    override def reduce(b: KllSketch, a: java.lang.Double): KllSketch = {
-      if (a != null) b.update(a.doubleValue())
-      b
-    }
-    override def merge(x: KllSketch, y: KllSketch): KllSketch = x.merge(y)
-    override def finish(b: KllSketch): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[KllSketch] = Encoders.kryo[KllSketch]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
-  // ---- t-digest quantiles over doubles
-
-  final class TDigestAggregator(compression: Double)
-      extends Aggregator[java.lang.Double, TDigest, Array[Byte]] {
-    override def zero: TDigest = TDigest(compression)
-    override def reduce(b: TDigest, a: java.lang.Double): TDigest = {
-      if (a != null) b.update(a.doubleValue())
-      b
-    }
-    override def merge(x: TDigest, y: TDigest): TDigest = x.merge(y)
-    override def finish(b: TDigest): Array[Byte] = b.serialize()
-    override def bufferEncoder: Encoder[TDigest] = Encoders.kryo[TDigest]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
 
   // ---- exact top-k rows by priority (mergeable — the streaming q86 face)
 

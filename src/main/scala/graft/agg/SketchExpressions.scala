@@ -9,7 +9,7 @@ import graft.sketch.{CountMinSketch, Hash128}
 
 /**
  * Native scalar Catalyst expressions over serialized sketches — the SQL
- * probe surface that pairs with [[NativeCountMinAgg]] (the build surface).
+ * probe surface that pairs with [[SketchAgg]] (the build surface).
  *
  * Versus the `functions.udf` probes in [[SketchFunctions]] (which stay the
  * Scala-API default): no encoder round-trip — the key is hashed straight
@@ -26,7 +26,7 @@ import graft.sketch.{CountMinSketch, Hash128}
 /** The ONE definition of the zero-copy UTF8String double-hash (seed
   * derivation `seed ^ Seed1/Seed2` must stay bit-identical to
   * `Hash128.ofString` — parity pinned in HashingSpec). Shared by the
-  * native build aggregates and the scalar probe expressions so the
+  * sketch build aggregate and the scalar probe expressions so the
   * arithmetic can never drift between copies. */
 private[agg] object Utf8Hash {
   @inline def h1(utf8: UTF8String, seed: Long): Long =
@@ -35,6 +35,10 @@ private[agg] object Utf8Hash {
   @inline def h2(utf8: UTF8String, seed: Long): Long =
     XXH64.hashUnsafeBytes(utf8.getBaseObject, utf8.getBaseOffset,
       utf8.numBytes, seed ^ Hash128.Seed2)
+  @inline def of(utf8: UTF8String, seed: Long): Hash128 = Hash128(h1(utf8, seed), h2(utf8, seed))
+  /** The single unsalted hash, == `XxHash64.hashString` (HyperLogLog's). */
+  @inline def h(utf8: UTF8String, seed: Long): Long =
+    XXH64.hashUnsafeBytes(utf8.getBaseObject, utf8.getBaseOffset, utf8.numBytes, seed)
 }
 
 case class CmQuerySketch(left: Expression, right: Expression)
@@ -113,7 +117,7 @@ case class KllQuantileSketch(left: Expression, right: Expression)
 /** Heavy-hitter listing from a serialized TopK sketch:
   * topk_entries_sketch(sketch, k) → array<struct<key string, est bigint>>
   * in deterministic (est desc, key asc) order — the SQL twin of the Scala
-  * API's `topk_entries`, paired with the [[NativeTopKAgg]] build. */
+  * API's `topk_entries`, paired with the `cm_topk` build. */
 case class TopKEntriesSketch(left: Expression, right: Expression)
   extends BinaryExpression with CodegenFallback {
 

@@ -1,16 +1,18 @@
 package graft.agg
 
-import org.apache.spark.sql.{Column, Encoders, SparkSession}
-import org.apache.spark.sql.functions
+import org.apache.spark.sql.{Column, functions}
+import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import graft.sketch._
 
 /**
- * User-facing surface of the sketch library: `Column`-returning builders
- * (usable directly in `df.agg(...)`) plus SQL registration under stable
- * names. Scalar query functions decode the fixed binary layout
- * ([[graft.sketch.SketchIO]]), mirroring the reference's split between
- * sketch build (update loop) and the point-query service that answers key
- * batches against finished sketch state
+ * User-facing surface of the sketch library: `Column`-returning builders,
+ * usable directly in `df.agg(...)`; [[graft.GraftExtensions]] registers the
+ * same aggregates and probes for SQL. Scalar query functions decode the
+ * fixed binary layout ([[graft.sketch.SketchIO]]), mirroring the reference's
+ * split between sketch build (update loop) and the point-query service that
+ * answers key batches against finished sketch state
  * (/root/reference/KernelQueue/main.c:63-144).
  */
 /** Decoded heavy-hitter entry: sketch-estimated count per key. */
@@ -20,8 +22,6 @@ final case class TopKEntry(key: String, est: Long)
 final case class FssEntry(key: String, f: Long, e: Long)
 
 object SketchFunctions {
-
-  import SketchAggregators._
 
   /**
    * Thread-local memo for deserialized sketches. Broadcast-sketch probe
@@ -89,81 +89,111 @@ object SketchFunctions {
   private val kllMemo = new SketchMemo[KllSketch]
   private val tdMemo = new SketchMemo[TDigest]
 
-  private val tupleStrLong = Encoders.product[(String, Long)]
-
   // ---- aggregate builders (Column API)
+  //
+  // Each returns a Column over the one [[SketchAgg]] build. Inputs are cast
+  // explicitly to what the aggregate reads: keys to STRING, weights to
+  // BIGINT, quantile values to DOUBLE (no-ops on columns already of that
+  // type, removed by the optimizer).
+
+  private def agg(name: String, spec: SketchSpec[_ <: AnyRef], inputs: Column*): Column =
+    ColumnBridge.aggregate(SketchAgg(name, spec, inputs.map(ColumnBridge.expression)))
+
+  private def keyed(name: String, spec: SketchSpec[_ <: AnyRef], key: Column,
+      weight: Column): Column =
+    agg(name, spec, key.cast(StringType), weight.cast(LongType))
 
   /** Count-Min build: `cm_sketch(key, weight)` → binary sketch. */
   def cm_sketch(key: Column, weight: Column, eps: Double = 1e-4,
       delta: Double = 0.01, seed: Long = CountMinSketch.DefaultSeed): Column =
-    functions.udaf(new CmAggregator(eps, delta, seed), tupleStrLong)
-      .apply(key, weight)
+    keyed("cm_sketch", CmSpec(eps, delta, seed), key, weight)
 
   /** Merge pre-built CM sketches (shards → one). */
-  def cm_merge(sketch: Column): Column =
-    functions.udaf(new CmMergeAggregator, Encoders.BINARY).apply(sketch)
+  def cm_merge(sketch: Column): Column = agg("cm_merge", MergeSpec(SketchIO.MagicCM), sketch)
 
   /** Heavy-hitter build: CM + candidate heap of `capacity` keys. */
   def cm_topk(key: Column, weight: Column, capacity: Int, eps: Double = 1e-4,
       delta: Double = 0.01, seed: Long = CountMinSketch.DefaultSeed): Column =
-    functions.udaf(new TopKAggregator(capacity, eps, delta, seed), tupleStrLong)
-      .apply(key, weight)
+    keyed("cm_topk", TopKSpec(capacity, eps, delta, seed), key, weight)
 
   /** Count-Sketch build (signed rows, unbiased median query). */
   def cs_sketch(key: Column, weight: Column, depth: Int = 5, width: Int = 4096,
       seed: Long = CountSketch.DefaultSeed): Column =
-    functions.udaf(new CsAggregator(depth, width, seed), tupleStrLong)
-      .apply(key, weight)
+    keyed("cs_sketch", CsSpec(depth, width, seed), key, weight)
 
   /** Misra-Gries frequent-items summary (SketchVisor's role, provable). */
   def mg_sketch(key: Column, weight: Column, capacity: Int): Column =
-    functions.udaf(new MgAggregator(capacity), tupleStrLong).apply(key, weight)
+    keyed("mg_sketch", MgSpec(capacity), key, weight)
 
   /** Filtered Space-Saving summary. */
   def fss_sketch(key: Column, weight: Column, numEntries: Int,
       numBuckets: Int = 4096, seed: Long = FilteredSpaceSaving.DefaultSeed): Column =
-    functions.udaf(new FssAggregator(numEntries, numBuckets, seed), tupleStrLong)
-      .apply(key, weight)
+    keyed("fss_sketch", FssSpec(numEntries, numBuckets, seed), key, weight)
 
   def hll_sketch(key: Column, p: Int = 14,
       seed: Long = HyperLogLog.DefaultSeed): Column =
-    functions.udaf(new HllAggregator(p, seed), Encoders.STRING).apply(key)
+    agg("hll_sketch", HllSpec(p, seed), key.cast(StringType))
 
   def bloom_sketch(key: Column, expectedItems: Long, fpp: Double = 0.01,
       seed: Long = BloomFilter.DefaultSeed): Column =
-    functions.udaf(new BloomAggregator(expectedItems, fpp, seed), Encoders.STRING)
-      .apply(key)
+    agg("bloom_sketch", BloomSpec(expectedItems, fpp, seed), key.cast(StringType))
 
   def kll_sketch(x: Column, k: Int = 200,
       seed: Long = KllSketch.DefaultSeed): Column =
-    functions.udaf(new KllAggregator(k, seed),
-      Encoders.DOUBLE)
-      .apply(x)
+    agg("kll_sketch", KllSpec(k, seed), x.cast(DoubleType))
 
   /** Merge pre-built KLL shards (shards → one), the quantile tier's
     * re-aggregation surface next to [[cm_merge]]. */
-  def kll_merge(sketch: Column): Column =
-    functions.udaf(new KllMergeAggregator, Encoders.BINARY).apply(sketch)
+  def kll_merge(sketch: Column): Column = agg("kll_merge", MergeSpec(SketchIO.MagicKLL), sketch)
 
   /** Merge pre-built HLL shards (shards → one) — idempotent register max,
     * so overlapping shard sets never double-count. */
-  def hll_merge(sketch: Column): Column =
-    functions.udaf(new HllMergeAggregator, Encoders.BINARY).apply(sketch)
+  def hll_merge(sketch: Column): Column = agg("hll_merge", MergeSpec(SketchIO.MagicHLL), sketch)
+
+  /** Merge pre-built sketches of any one kind, dispatched on the magic tag. */
+  def sketch_merge(sketch: Column): Column = agg("sketch_merge", MergeSpec(0), sketch)
 
   def tdigest_sketch(x: Column, compression: Double = 100.0): Column =
-    functions.udaf(new TDigestAggregator(compression),
-      Encoders.DOUBLE)
-      .apply(x)
+    agg("tdigest_sketch", TDigestSpec(compression), x.cast(DoubleType))
 
   // ---- scalar query functions over serialized sketches
 
-  /** Point-frequency estimate of `key` from a serialized CM sketch. */
-  val cmQueryUdf: (Array[Byte], String) => Long = (bytes, key) =>
-    if (bytes == null || key == null) -1L
-    else cmMemo.get(bytes, CountMinSketch.deserialize).query(key)
+  // The scalar probes the SQL surface shares (see [[sqlScalars]]): one
+  // memoized function value per probe, so SQL and Column-API calls decode a
+  // repeated sketch once per thread, not once per row.
 
-  def cm_query(sketch: Column, key: Column): Column =
-    functions.udf(cmQueryUdf).apply(sketch, key)
+  private val cmQuery = functions.udf((b: Array[Byte], k: String) =>
+    if (b == null || k == null) -1L else cmMemo.get(b, CountMinSketch.deserialize).query(k))
+  private val cmTotal = functions.udf((b: Array[Byte]) =>
+    if (b == null) -1L else cmMemo.get(b, CountMinSketch.deserialize).totalWeight)
+  private val topkEntries = functions.udf((b: Array[Byte], k: Int) =>
+    if (b == null) Array.empty[TopKEntry]
+    else topkMemo.get(b, TopKSketch.deserialize).topK(k).map(e => TopKEntry(e._1, e._2)))
+  private val csQuery = functions.udf((b: Array[Byte], k: String) =>
+    if (b == null || k == null) -1L else csMemo.get(b, CountSketch.deserialize).query(k))
+  private val mgQuery = functions.udf((b: Array[Byte], k: String) =>
+    if (b == null || k == null) -1L else mgMemo.get(b, MisraGries.deserialize).query(k))
+  private val fssQuery = functions.udf((b: Array[Byte], k: String) =>
+    if (b == null || k == null) -1L
+    else fssMemo.get(b, FilteredSpaceSaving.deserialize).query(k))
+  private val hllCount = functions.udf((b: Array[Byte]) =>
+    if (b == null) -1L else hllMemo.get(b, HyperLogLog.deserialize).estimateLong())
+  private val bloomContains = functions.udf((b: Array[Byte], k: String) =>
+    b != null && k != null && bloomMemo.get(b, BloomFilter.deserialize).mightContain(k))
+  private val kllQuantile = functions.udf((b: Array[Byte], q: Double) =>
+    if (b == null) Double.NaN else kllMemo.get(b, KllSketch.deserialize).quantile(q))
+  private val tdigestQuantile = functions.udf((b: Array[Byte], q: Double) =>
+    if (b == null) Double.NaN else tdMemo.get(b, TDigest.deserialize).quantile(q))
+
+  /** SQL names of the scalar probes, registered by `graft.GraftExtensions`. */
+  private[graft] val sqlScalars: Seq[(String, UserDefinedFunction)] = Seq(
+    "cm_query" -> cmQuery, "cm_total" -> cmTotal, "topk_entries" -> topkEntries,
+    "cs_query" -> csQuery, "mg_query" -> mgQuery, "fss_query" -> fssQuery,
+    "hll_count" -> hllCount, "bloom_contains" -> bloomContains,
+    "kll_quantile" -> kllQuantile, "tdigest_quantile" -> tdigestQuantile)
+
+  /** Point-frequency estimate of `key` from a serialized CM sketch. */
+  def cm_query(sketch: Column, key: Column): Column = cmQuery(sketch, key)
 
   /** Batched point-frequency probe: decode the sketch ONCE, answer every
     * key in the array — the preferred probe shape when the key set fits a
@@ -217,29 +247,14 @@ object SketchFunctions {
   }
 
   /** Total stream weight N recorded in a CM sketch (for ε·N bounds). */
-  def cm_total(sketch: Column): Column =
-    functions.udf((bytes: Array[Byte]) =>
-      if (bytes == null) -1L else cmMemo.get(bytes, CountMinSketch.deserialize).totalWeight
-    ).apply(sketch)
+  def cm_total(sketch: Column): Column = cmTotal(sketch)
 
   /** Top-k entries of a serialized TopK sketch → array<struct<key,est>>. */
-  def topk_entries(sketch: Column, k: Int): Column =
-    functions.udf((bytes: Array[Byte]) =>
-      if (bytes == null) Array.empty[TopKEntry]
-      else TopKSketch.deserialize(bytes).topK(k).map(e => TopKEntry(e._1, e._2))
-    ).apply(sketch)
+  def topk_entries(sketch: Column, k: Int): Column = topkEntries(sketch, functions.lit(k))
 
-  def cs_query(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      if (bytes == null || key == null) -1L
-      else csMemo.get(bytes, CountSketch.deserialize).query(key)
-    ).apply(sketch, key)
+  def cs_query(sketch: Column, key: Column): Column = csQuery(sketch, key)
 
-  def mg_query(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      if (bytes == null || key == null) -1L
-      else mgMemo.get(bytes, MisraGries.deserialize).query(key)
-    ).apply(sketch, key)
+  def mg_query(sketch: Column, key: Column): Column = mgQuery(sketch, key)
 
   /** All (key, est) entries of a Misra-Gries summary. */
   def mg_entries(sketch: Column): Column =
@@ -249,11 +264,7 @@ object SketchFunctions {
         .sortBy { case (k, v) => (-v, k) }.map(e => TopKEntry(e._1, e._2))
     ).apply(sketch)
 
-  def fss_query(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      if (bytes == null || key == null) -1L
-      else fssMemo.get(bytes, FilteredSpaceSaving.deserialize).query(key)
-    ).apply(sketch, key)
+  def fss_query(sketch: Column, key: Column): Column = fssQuery(sketch, key)
 
   /** All (key, f, e) entries of an FSS summary, f desc. */
   def fss_entries(sketch: Column): Column =
@@ -264,10 +275,7 @@ object SketchFunctions {
         .map { case (k, f, e) => FssEntry(k, f, e) }
     ).apply(sketch)
 
-  def hll_count(sketch: Column): Column =
-    functions.udf((bytes: Array[Byte]) =>
-      if (bytes == null) -1L else hllMemo.get(bytes, HyperLogLog.deserialize).estimateLong()
-    ).apply(sketch)
+  def hll_count(sketch: Column): Column = hllCount(sketch)
 
   def hll_stderr(sketch: Column): Column =
     functions.udf((bytes: Array[Byte]) =>
@@ -288,76 +296,19 @@ object SketchFunctions {
       else HyperLogLog.deserialize(x).merge(HyperLogLog.deserialize(y)).serialize()
     ).apply(a, b)
 
-  def bloom_contains(sketch: Column, key: Column): Column =
-    functions.udf((bytes: Array[Byte], key: String) =>
-      bytes != null && key != null && bloomMemo.get(bytes, BloomFilter.deserialize).mightContain(key)
-    ).apply(sketch, key)
+  def bloom_contains(sketch: Column, key: Column): Column = bloomContains(sketch, key)
 
-  def kll_quantile(sketch: Column, q: Column): Column =
-    functions.udf((bytes: Array[Byte], q: Double) =>
-      if (bytes == null) Double.NaN else kllMemo.get(bytes, KllSketch.deserialize).quantile(q)
-    ).apply(sketch, q)
+  def kll_quantile(sketch: Column, q: Column): Column = kllQuantile(sketch, q)
 
   def kll_n(sketch: Column): Column =
     functions.udf((bytes: Array[Byte]) =>
       if (bytes == null) -1L else kllMemo.get(bytes, KllSketch.deserialize).n
     ).apply(sketch)
 
-  def tdigest_quantile(sketch: Column, q: Column): Column =
-    functions.udf((bytes: Array[Byte], q: Double) =>
-      if (bytes == null) Double.NaN else tdMemo.get(bytes, TDigest.deserialize).quantile(q)
-    ).apply(sketch, q)
+  def tdigest_quantile(sketch: Column, q: Column): Column = tdigestQuantile(sketch, q)
 
   def tdigest_rank(sketch: Column, x: Column): Column =
     functions.udf((bytes: Array[Byte], x: Double) =>
       if (bytes == null) Double.NaN else tdMemo.get(bytes, TDigest.deserialize).rank(x)
     ).apply(sketch, x)
-
-  // ---- SQL registration
-
-  /** Register every aggregate + scalar under `cm_sketch`-style SQL names
-    * with library-default parameters. */
-  def register(spark: SparkSession): Unit = {
-    val r = spark.udf
-    r.register("cm_sketch",
-      functions.udaf(new CmAggregator(1e-4, 0.01, CountMinSketch.DefaultSeed), tupleStrLong))
-    r.register("cm_merge", functions.udaf(new CmMergeAggregator, Encoders.BINARY))
-    r.register("cm_topk",
-      functions.udaf(new TopKAggregator(1024, 1e-4, 0.01, CountMinSketch.DefaultSeed), tupleStrLong))
-    r.register("hll_sketch",
-      functions.udaf(new HllAggregator(14, HyperLogLog.DefaultSeed), Encoders.STRING))
-    r.register("bloom_sketch",
-      functions.udaf(new BloomAggregator(1 << 20, 0.01, BloomFilter.DefaultSeed), Encoders.STRING))
-    r.register("kll_sketch",
-      functions.udaf(new KllAggregator(200, KllSketch.DefaultSeed),
-        Encoders.DOUBLE))
-    r.register("tdigest_sketch",
-      functions.udaf(new TDigestAggregator(100.0),
-        Encoders.DOUBLE))
-    r.register("cs_sketch",
-      functions.udaf(new CsAggregator(5, 4096, CountSketch.DefaultSeed), tupleStrLong))
-    r.register("mg_sketch", functions.udaf(new MgAggregator(1024), tupleStrLong))
-    r.register("fss_sketch",
-      functions.udaf(new FssAggregator(1024, 4096, FilteredSpaceSaving.DefaultSeed), tupleStrLong))
-    r.register("cs_query", (b: Array[Byte], k: String) =>
-      if (b == null || k == null) -1L else CountSketch.deserialize(b).query(k))
-    r.register("mg_query", (b: Array[Byte], k: String) =>
-      if (b == null || k == null) -1L else MisraGries.deserialize(b).query(k))
-    r.register("fss_query", (b: Array[Byte], k: String) =>
-      if (b == null || k == null) -1L else FilteredSpaceSaving.deserialize(b).query(k))
-    r.register("cm_query", cmQueryUdf)
-    r.register("cm_total", (b: Array[Byte]) =>
-      if (b == null) -1L else CountMinSketch.deserialize(b).totalWeight)
-    r.register("hll_count", (b: Array[Byte]) =>
-      if (b == null) -1L else HyperLogLog.deserialize(b).estimateLong())
-    r.register("bloom_contains", (b: Array[Byte], k: String) =>
-      b != null && k != null && BloomFilter.deserialize(b).mightContain(k))
-    r.register("kll_quantile", (b: Array[Byte], q: Double) =>
-      if (b == null) Double.NaN else KllSketch.deserialize(b).quantile(q))
-    r.register("tdigest_quantile", (b: Array[Byte], q: Double) =>
-      if (b == null) Double.NaN else TDigest.deserialize(b).quantile(q))
-    r.register("topk_entries", (b: Array[Byte], k: Int) =>
-      if (b == null) Array.empty[TopKEntry]
-      else TopKSketch.deserialize(b).topK(k).map(e => TopKEntry(e._1, e._2)))
-  }
 }

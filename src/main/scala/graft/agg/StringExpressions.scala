@@ -131,26 +131,7 @@ case class CdcCuts(child: Expression, window: Int, div: Int)
 }
 
 object StringExpressions {
-
-  /** The ONE cdc_cuts builder — shared by [[register]] and
-    * `GraftExtensions.functionDescriptions` (the VectorExpressions
-    * discipline, so the two registration paths cannot drift). */
-  val cdcCutsBuilder: Seq[Expression] => Expression = exprs => {
-    require(exprs.length == 3,
-      "usage: cdc_cuts(text, window, div) with literal window/div")
-    def foldInt(e: Expression, name: String): Int = {
-      require(e.foldable, s"cdc_cuts: $name must be a literal")
-      e.eval() match {
-        case x: java.lang.Number => x.intValue()
-        case other =>
-          throw new IllegalArgumentException(s"cdc_cuts: $name not numeric: $other")
-      }
-    }
-    CdcCuts(exprs.head, foldInt(exprs(1), "window"), foldInt(exprs(2), "div"))
-  }
-
-  /** Idempotent session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_cuts", cdcCutsBuilder, "built-in")
+  /** Idempotent session registration of `cdc_cuts` from the one
+    * `GraftExtensions` table. */
+  def register(spark: SparkSession): Unit = graft.GraftExtensions.install(spark, "cdc_cuts")
 }

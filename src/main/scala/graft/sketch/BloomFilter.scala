@@ -16,7 +16,7 @@ final class BloomFilter private (
     val seed: Long,
     val words: Array[Long],
     private var _itemsAdded: Long
-) extends Serializable {
+) extends Mergeable[BloomFilter] {
 
   def itemsAdded: Long = _itemsAdded
 

@@ -19,7 +19,7 @@ final class HyperLogLog private (
     val p: Int,
     val seed: Long,
     val registers: Array[Byte]
-) extends Serializable {
+) extends Mergeable[HyperLogLog] {
 
   val m: Int = 1 << p
 

@@ -52,7 +52,7 @@ final class KllSketch private (
     private var levels: Array[DoubleBuf],
     private var _n: Long,
     private var compactions: Long
-) extends Serializable {
+) extends Mergeable[KllSketch] {
 
   def n: Long = _n
   def numLevels: Int = levels.length

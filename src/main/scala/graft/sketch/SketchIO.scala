@@ -2,6 +2,13 @@ package graft.sketch
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+/** What every sketch kernel offers the aggregate layer: an in-place merge
+  * with a same-kind sketch and its [[SketchIO]] wire bytes. */
+trait Mergeable[S] extends Serializable {
+  def merge(other: S): S
+  def serialize(): Array[Byte]
+}
+
 /**
  * Little-endian fixed-layout binary (de)serialization helpers shared by all
  * sketch kernels. Every serialized sketch starts with a 4-byte magic tag so a
@@ -14,6 +21,34 @@ object SketchIO {
   final val MagicKLL: Int = 0x4B4C4C31 // "KLL1"
   final val MagicTD: Int = 0x54444731 // "TDG1"
   final val MagicTopK: Int = 0x54504B31 // "TPK1"
+
+  /** The 4-character name of a magic tag, e.g. "CMS1", for error messages. */
+  def tagName(magic: Int): String =
+    new String(ByteBuffer.allocate(4).putInt(magic).array(),
+      java.nio.charset.StandardCharsets.US_ASCII)
+
+  /** Decode serialized sketch bytes of any kernel, dispatching on the magic
+    * tag. Unknown tags fail with an IllegalArgumentException. */
+  def decode(bytes: Array[Byte]): Mergeable[_] =
+    tag(bytes) match {
+      case MagicCM => CountMinSketch.deserialize(bytes)
+      case MagicHLL => HyperLogLog.deserialize(bytes)
+      case MagicBloom => BloomFilter.deserialize(bytes)
+      case MagicKLL => KllSketch.deserialize(bytes)
+      case MagicTD => TDigest.deserialize(bytes)
+      case MagicTopK => TopKSketch.deserialize(bytes)
+      case CountSketch.Magic => CountSketch.deserialize(bytes)
+      case MisraGries.Magic => MisraGries.deserialize(bytes)
+      case FilteredSpaceSaving.Magic => FilteredSpaceSaving.deserialize(bytes)
+      case other => throw new IllegalArgumentException(
+        s"not a serialized sketch (magic=0x${other.toHexString})")
+    }
+
+  /** The magic tag that serialized sketch bytes start with. */
+  def tag(bytes: Array[Byte]): Int = {
+    require(bytes.length >= 4, s"not a serialized sketch (${bytes.length} bytes)")
+    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).getInt
+  }
 
   def writer(capacity: Int): ByteBuffer =
     ByteBuffer.allocate(capacity).order(ByteOrder.LITTLE_ENDIAN)

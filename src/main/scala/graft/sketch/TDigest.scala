@@ -21,7 +21,7 @@ final class TDigest private (
     private var _totalWeight: Double,
     private var _min: Double,
     private var _max: Double
-) extends Serializable {
+) extends Mergeable[TDigest] {
 
   private val bufCap = math.max(64, (4 * compression).toInt)
   private var bufMeans = new Array[Double](bufCap)

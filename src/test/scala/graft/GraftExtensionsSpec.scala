@@ -121,10 +121,29 @@ class GraftExtensionsSpec extends SparkTestBase {
       spark.sql("SELECT cm_sketch_fast(w, w) FROM ext_fixture").collect()
     }
     assert(e2.getMessage.contains("cm_sketch_fast"))
+    // a bad literal argument is reported under the function that took it
+    val e3 = intercept[Exception] {
+      spark.sql("SELECT topk_sketch_fast(k, w, 'many') FROM ext_fixture").collect()
+    }
+    assert(e3.getMessage.contains("topk_sketch_fast: capacity must be numeric"), e3.getMessage)
   }
 
   test("extensions class injects without error (spark-submit wiring)") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(fd: FunctionDescription): Unit = {
+        injected += fd._1.funcName
+        super.injectFunction(fd)
+      }
+    }
     new GraftExtensions().apply(ext) // must register all builders cleanly
+    // and install exposes exactly the injected names, no more, no fewer
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    val before = registry.listFunction().map(_.funcName).toSet
+    GraftExtensions.install(fresh)
+    val installed = registry.listFunction().map(_.funcName).toSet -- before
+    assert(injected.toSet === installed)
+    assert(injected.size === injected.toSet.size)
   }
 }

@@ -131,7 +131,7 @@ class AggregatorsSpec extends SparkTestBase {
   }
 
   test("SQL registration: cm_sketch/cm_query usable from spark.sql") {
-    SketchFunctions.register(spark)
+    graft.GraftExtensions.install(spark)
     streamDf(8).createOrReplaceTempView("stream_v")
     val rows = spark.sql(
       """SELECT cm_query(sk, 'key_0') AS est FROM
